@@ -10,9 +10,22 @@ import graft.etl.{ConfigLoader, Enrich, Pipeline}
   *       [--pages fixtures/pages] [--out /tmp/out]
   *
   * Fail-fast guards mirror the reference: exit 1 on missing/invalid
-  * config or empty extract.
+  * config or empty extract. `SPARK_GRAFT_CPUS` sets the local core
+  * count and shuffle width (default: every core); a value that is not
+  * a whole number from 1 to the core count also exits 1.
   */
 object Main {
+
+  /** The core count `SPARK_GRAFT_CPUS` asks for: unset means `nproc`;
+    * otherwise it must be a whole number from 1 to `nproc`. */
+  private[graft] def cpus(raw: Option[String], nproc: Int): Either[String, Int] =
+    raw match {
+      case None => Right(nproc)
+      case Some(s) =>
+        Some(s.trim).filter(_.matches("[0-9]{1,9}")).map(_.toInt).filter(n => n >= 1 && n <= nproc)
+          .toRight(s"SPARK_GRAFT_CPUS='$s' must be a whole number from 1 to nproc ($nproc)")
+    }
+
   def main(args: Array[String]): Unit = {
     val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
     val configPath = opts.getOrElse("--config", {
@@ -24,9 +37,11 @@ object Main {
       catch {
         case e: Exception => System.err.println(s"config error: ${e.getMessage}"); sys.exit(1)
       }
+    val cores = cpus(sys.env.get("SPARK_GRAFT_CPUS"), Runtime.getRuntime.availableProcessors)
+      .fold(msg => { System.err.println(msg); sys.exit(1) }, identity)
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)

@@ -11,7 +11,12 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * parse failure, follow `nextPageToken` until absent, and stop at a
   * 100-page safety cap. The fetch is inherently serial — each request
   * needs the previous page's token — so it stays a driver-side loop
-  * here too; Spark parallelism starts once the page bodies are known.
+  * here too: [[PageFetcher.walk]], shared with
+  * [[StudiesSource.readPaged]], reads each token with Jackson and runs
+  * no Spark job. Spark parallelism starts once the pages are known.
+  * Beyond the reference, the walk also aborts on a token it has already
+  * followed ([[WalkAbort.Cycle]]) instead of re-reading pages until the
+  * cap.
   */
 trait PageFetcher {
 
@@ -62,6 +67,24 @@ final class FilePageFetcher(dir: String, first: String = "page_1.json") extends 
     catch { case _: java.io.IOException => None }
 }
 
+/** Why a token walk stopped before a final page. Every outcome aborts
+  * the whole extract: partial results are discarded (`etl.py:124-127`).
+  * `page` is the token that named the page (None = the first page). */
+sealed abstract class WalkAbort(what: String) {
+  def page: Option[String]
+  def message: String = s"${page.fold("first page")(p => s"page '$p'")} $what"
+}
+
+object WalkAbort {
+  /** The fetch failed: non-200, network error, missing page file. */
+  final case class FetchFailed(page: Option[String]) extends WalkAbort("could not be fetched")
+  /** The body is not a JSON document (e.g. an HTML error page behind a 200). */
+  final case class Malformed(page: Option[String]) extends WalkAbort("is not a JSON document")
+  /** A `nextPageToken` named a page the walk had already read. */
+  final case class Cycle(page: Option[String])
+      extends WalkAbort("was already read: the nextPageToken chain repeats")
+}
+
 object PageFetcher {
 
   // Jackson ships on the Spark classpath; driver-side, one tiny doc at a
@@ -71,49 +94,66 @@ object PageFetcher {
   /** Token parse with failure distinguished from absence: Left = the
     * body is not JSON at all (protocol failure — e.g. an HTML error page
     * behind a 200), Right(None) = a well-formed final page, Right(token)
-    * = more pages. The distinction matters: a malformed body must abort
+    * = more pages; a JSON `null` or empty token ends the chain like an
+    * absent one. The distinction matters: a malformed body must abort
     * the whole extract (partial results are discarded, etl.py:124-127),
     * not silently terminate the chain with garbage kept. */
   private[etl] def parseToken(body: String): Either[Unit, Option[String]] =
     try {
       val node = mapper.readTree(body)
       if (node == null || !node.isContainerNode) Left(())
-      else Right(Option(node.get("nextPageToken")).map(_.asText()).filter(_.nonEmpty))
+      else Right(Option(node.get("nextPageToken")).filterNot(_.isNull).map(_.asText())
+        .filter(_.nonEmpty))
     } catch { case _: java.io.IOException => Left(()) }
 
   /** `nextPageToken` of a page body, if present and non-empty. */
   def nextToken(body: String): Option[String] =
     parseToken(body).toOption.flatten
 
-  /** Walk the token chain: accumulate page bodies until no token, abort
-    * to None if ANY page fails (`etl.py:124-127` — partial results are
-    * discarded), hard-stop at `maxPages`. */
-  def fetchPages(fetcher: PageFetcher, maxPages: Int = 100): Option[Seq[String]] = {
-    val pages = scala.collection.mutable.ArrayBuffer.empty[String]
-    var token: Option[String] = None
+  /** The one token walk, shared by [[fetchPages]] and
+    * [[StudiesSource.readPaged]]; plain driver code, no Spark job.
+    * `fetch(token)` returns what the caller keeps for a page plus its
+    * body, or None on a failed fetch; the body is parsed for the next
+    * token and then dropped. `first` names the first page when it has a
+    * name, so a chain that links back to it is caught as well. The walk
+    * follows tokens until a page has none, stops quietly at `maxPages`,
+    * and aborts on a failed fetch, a malformed body, or a token it has
+    * already followed. */
+  private[etl] def walk[A](first: Option[String], maxPages: Int)(
+      fetch: Option[String] => Option[(A, String)]): Either[WalkAbort, Seq[A]] = {
+    val kept = scala.collection.mutable.ArrayBuffer.empty[A]
+    val seen = scala.collection.mutable.HashSet(first)
+    var token = first
     var more = true
-    while (more && pages.size < maxPages) {
-      fetcher.fetch(token) match {
-        case None => return None
-        case Some(body) =>
+    while (more && kept.size < maxPages) {
+      fetch(token) match {
+        case None => return Left(WalkAbort.FetchFailed(token))
+        case Some((a, body)) =>
           parseToken(body) match {
-            case Left(_) => return None // malformed page — discard everything
-            case Right(t) =>
-              pages += body
-              token = t
-              more = t.isDefined
+            case Left(_) => return Left(WalkAbort.Malformed(token))
+            case Right(next) =>
+              kept += a
+              more = next.isDefined
+              if (more && kept.size < maxPages && !seen.add(next))
+                return Left(WalkAbort.Cycle(next))
+              token = next
           }
       }
     }
-    Some(pages.toSeq)
+    Right(kept.toSeq)
   }
+
+  /** Walk the token chain through `fetcher`: the page bodies in chain
+    * order, or None if the walk aborted (see [[walk]]). */
+  def fetchPages(fetcher: PageFetcher, maxPages: Int = 100): Option[Seq[String]] =
+    walk(None, maxPages)(t => fetcher.fetch(t).map(b => (b, b))).toOption
 
   /** Full extract through the seam: fetch every page on the driver, then
     * parse + explode distributed (`spark.read.json` over an in-memory
     * Dataset — one record per page body, so multiline page docs are
     * fine). None if the walk aborted. For file-backed page sets prefer
-    * [[StudiesSource.readPaged]], which scans page FILES distributed
-    * instead of materializing bodies on the driver. */
+    * [[StudiesSource.readPaged]], which keeps only the page paths on the
+    * driver and scans the page FILES distributed. */
   def readFetched(spark: SparkSession, fetcher: PageFetcher,
                   maxPages: Int = 100): Option[DataFrame] =
     fetchPages(fetcher, maxPages).map { pages =>

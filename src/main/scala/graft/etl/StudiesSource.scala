@@ -1,5 +1,8 @@
 package graft.etl
 
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,15 +13,16 @@ import org.apache.spark.sql.functions._
   * `studies`, follow `nextPageToken` until absent, hard-stop at 100
   * pages. Page fetch is inherently serial (each request needs the
   * previous page's token), so — as in the reference — pagination is a
-  * driver-side loop; Spark parallelism starts once the page set is
-  * known: all discovered pages are read by a single distributed
+  * driver-side loop that costs no Spark job: it reads each page once
+  * and parses only its token. Spark parallelism starts once the page
+  * set is known: all discovered pages are read by a single distributed
   * `spark.read.json` over the file list (the "page union" of
   * `etl.py:130-131` becomes one multi-file scan instead of N unions).
   *
-  * Offline stand-in: a page document is a local JSON file and
-  * `nextPageToken` holds the *name of the next page file*. A real HTTP
-  * implementation would swap `readPageDoc` for a GET with the token as
-  * a query param — the loop shape is identical.
+  * Offline stand-in: a page document is a file and `nextPageToken`
+  * holds the *name of the next page file*. The HTTP protocol runs the
+  * same walk through [[PageFetcher.readFetched]] with an
+  * [[HttpPageFetcher]].
   */
 object StudiesSource {
 
@@ -29,8 +33,9 @@ object StudiesSource {
     * immutable-once-loaded contract as [[graft.Tables]]: there is NO
     * content invalidation, so a path whose file is rewritten within one
     * session would serve the stale schema/plan. Callers (EtlQueries,
-    * Bench warm-up, PipelineSpec) all read fixed fixture paths; a test
-    * that mutates a page file must use a fresh path or session. */
+    * Bench warm-up, TypedStudies, all through [[readStudies]]) read
+    * fixed fixture paths; a test that mutates a studies file must use a
+    * fresh path or session. [[readPaged]] does not use this cache. */
   private val pageCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
@@ -58,21 +63,26 @@ object StudiesSource {
 
   /** Follow the pagination chain starting at `first`, honoring the
     * reference's 100-page safety cap (`etl.py:155-158`), then scan all
-    * pages in one distributed read. */
+    * pages in one distributed read. The walk is [[PageFetcher.walk]]:
+    * each page body is read once through the Hadoop `FileSystem` API
+    * (any scheme `spark.read.json` accepts) and its token parsed on the
+    * driver, so the walk itself submits no Spark job; only the page
+    * paths are kept. A missing page, a page that is not JSON, or a
+    * token naming a page already read aborts the extract with an
+    * `IllegalStateException` that names the page. */
   def readPaged(spark: SparkSession, dir: String, first: String = "page_1.json",
                 maxPages: Int = 100): DataFrame = {
-    var next: Option[String] = Some(first)
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (next.isDefined && files.size < maxPages) {
-      val path = s"$dir/${next.get}"
-      files += path
-      val doc = readPageDoc(spark, path)
-      next =
-        if (doc.columns.contains("nextPageToken"))
-          doc.select(col("nextPageToken")).collect().headOption.flatMap(r => Option(r.getString(0)))
-        else None
-    }
-    val all = spark.read.option("multiLine", true).json(files.toSeq: _*)
+    val conf = spark.sessionState.newHadoopConf()
+    val files = PageFetcher.walk(Some(first), maxPages) { token =>
+      val path = new Path(dir, token.get)
+      try {
+        val in = path.getFileSystem(conf).open(path)
+        try Some(path.toString -> new String(in.readAllBytes(), StandardCharsets.UTF_8))
+        finally in.close()
+      } catch { case _: FileNotFoundException => None }
+    }.fold(a => throw new IllegalStateException(s"paged extract from $dir aborted: ${a.message}"),
+      identity)
+    val all = spark.read.option("multiLine", true).json(files: _*)
     if (all.columns.contains("studies")) explodeStudies(all)
     else spark.emptyDataFrame
   }

@@ -56,6 +56,30 @@ class PageFetcherSpec extends AnyFunSuite {
     assert(PageFetcher.fetchPages(new StubFetcher(1, endless = true), maxPages = 5).get.size == 5)
   }
 
+  test("a repeated token aborts the WHOLE extract at the first repeat") {
+    // tok2 -> tok3 -> tok2: the walk must not re-read tok2 or keep its
+    // studies twice
+    var fetched = 0
+    val f = new PageFetcher {
+      def fetch(token: Option[String]): Option[String] = {
+        fetched += 1
+        val next = if (token.contains("tok2")) "tok3" else "tok2"
+        Some(s"""{"studies": [{"id": "${token.getOrElse("first")}"}], "nextPageToken": "$next"}""")
+      }
+    }
+    assert(PageFetcher.walk(None, 100)(t => f.fetch(t).map(b => (b, b))) ==
+      Left(WalkAbort.Cycle(Some("tok2"))))
+    assert(fetched == 3)
+    assert(PageFetcher.fetchPages(f).isEmpty)
+    assert(PageFetcher.readFetched(spark, f).isEmpty)
+  }
+
+  test("a null or empty nextPageToken ends the chain like an absent one") {
+    Seq("null", "\"\"").foreach { t =>
+      assert(PageFetcher.nextToken(s"""{"studies": [], "nextPageToken": $t}""").isEmpty)
+    }
+  }
+
   test("readFetched parses driver-held page bodies into exploded study rows") {
     val df = PageFetcher.readFetched(spark, new StubFetcher(3)).get
     assert(df.count() == 3)

@@ -24,6 +24,71 @@ class SourceSinkSpec extends AnyFunSuite {
     assert(df.count() == 0)
   }
 
+  /** A temp-dir page chain: each (name, body) becomes a page file. */
+  private def chain(pages: (String, String)*): String = {
+    val dir = Files.createTempDirectory("pagechain")
+    pages.foreach { case (name, body) => Files.writeString(dir.resolve(name), body) }
+    dir.toString
+  }
+
+  private def page(id: String, next: Option[String]): String =
+    s"""{"studies": [{"id": "$id"}]${next.fold("")(t => s""", "nextPageToken": "$t"""")}}"""
+
+  test("a repeated nextPageToken aborts the extract at the page already read") {
+    val dir = chain(
+      "page_1.json" -> page("S1", Some("page_2.json")),
+      "page_2.json" -> page("S2", Some("page_1.json")))
+    val e = intercept[IllegalStateException](StudiesSource.readPaged(spark, dir))
+    assert(e.getMessage.contains("page 'page_1.json' was already read"), e.getMessage)
+  }
+
+  test("a malformed page aborts the extract and names the page") {
+    val dir = chain(
+      "page_1.json" -> page("S1", Some("page_2.json")),
+      "page_2.json" -> "<html>502 Bad Gateway</html>")
+    val e = intercept[IllegalStateException](StudiesSource.readPaged(spark, dir))
+    assert(e.getMessage.contains("page 'page_2.json' is not a JSON document"), e.getMessage)
+  }
+
+  test("a token naming a missing page file aborts the extract") {
+    val dir = chain("page_1.json" -> page("S1", Some("page_2.json")))
+    val e = intercept[IllegalStateException](StudiesSource.readPaged(spark, dir))
+    assert(e.getMessage.contains("page 'page_2.json' could not be fetched"), e.getMessage)
+  }
+
+  test("the token walk submits no Spark job: at most the final scan's one") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "readPaged-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fenceDone = new java.util.concurrent.CountDownLatch(1)
+    var fenceId = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) jobs.incrementAndGet()
+        else if (g == s"$group-fence") fenceId = e.jobId
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == fenceId) fenceDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "readPaged over the fixture chain")
+      val df = StudiesSource.readPaged(spark, "fixtures/pages")
+      // the listener bus delivers in order: once a fence job's end event
+      // arrives, every job readPaged started has been counted
+      sc.setJobGroup(s"$group-fence", "listener fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenceDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get <= 1, s"readPaged submitted ${jobs.get} jobs")
+      assert(df.count() == 14)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("csv sink: fixed header order incl. phantom empty min/max age, optional AI column") {
     val flat = Flatten(StudiesSource.readStudies(spark, "/root/repo/fixtures/studies.json"))
     val enriched = Enrich.enrichAll(flat)

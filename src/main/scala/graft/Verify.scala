@@ -32,11 +32,6 @@ object Verify {
       case StructField(n, _, _, _) => col(n)
     }.toIndexedSeq: _*)
   def main(args: Array[String]): Unit = {
-    // Per-JVM pool builds (no durable cross-JVM reuse): the two-JVM
-    // determinism gate exists to catch merge-order flap ACROSS JVMs
-    // (the r52 494<->495 case) — a shared on-disk pool would hide
-    // exactly that class, so Verify always re-derives pools.
-    System.setProperty("graft.pool.rebuild", "1")
     val (sfDir, outDir) = (args(0), args(1))
     // Optional 3rd+ args: restrict the dump to the named queries (dev loop).
     val only: Set[String] = args.drop(2).toSet

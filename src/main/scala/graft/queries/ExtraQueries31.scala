@@ -263,7 +263,12 @@ object ExtraQueries31 {
   // per-k distinct-inside-the-doc grain and the per-k aggregates are
   // unchanged (grouping by (k, sk) then k computes exactly the old
   // per-k global aggregates, since the tag partitions the key space).
+  // A k with no shingles anywhere (every document shorter than k) has
+  // no (k, sk) group, so the per-k aggregate is right-joined onto the
+  // ShingleKs literal relation: that k reports (k, 0, NULL, NULL), the
+  // row the oracle's per-k ungrouped count()/sum() always emits.
   private val d32: Fn = (s, d) => {
+    import s.implicits._
     val tagged = ShingleKs.map { k =>
       expr(
         s"CASE WHEN size(sp) >= $k THEN " +
@@ -272,7 +277,7 @@ object ExtraQueries31 {
           s"h -> struct($k as k, h as sk)) " +
           "ELSE cast(array() as array<struct<k:int,sk:bigint>>) END")
     }
-    docs(s, d).select(split(col("text"), " ").as("sp"))
+    val perK = docs(s, d).select(split(col("text"), " ").as("sp"))
       .select(explode(concat(tagged: _*)).as("ks"))
       .select(col("ks.k").as("k"), col("ks.sk").as("sk"))
       .groupBy("k", "sk").agg(count(lit(1)).as("dn"))
@@ -281,6 +286,9 @@ object ExtraQueries31 {
         sum(col("dn")).cast(LongType).as("n_doc_shingles"),
         (sum((col("dn") * (col("dn") - 1)).cast(DecimalType(38, 0))) / 2)
           .cast(LongType).as("pair_bound"))
+    perK.join(ShingleKs.toDF("k"), Seq("k"), "right")
+      .select(col("k"), coalesce(col("n_types"), lit(0L)).as("n_types"),
+        col("n_doc_shingles"), col("pair_bound"))
       .orderBy("k")
   }
   private val d32Sql = {

@@ -3,204 +3,74 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One-materialization-per-run registry for intermediates shared by
-  * SEVERAL registered queries (r6 verdict stretch 8), with a DURABLE
-  * cross-JVM layer (r10 verdict item 1).
+  * SEVERAL registered queries (r6 verdict stretch 8).
   *
   * In-memory `persist` cannot serve this role: Verify and Bench call
-  * `spark.catalog.clearCache()` after every query (by design — 361
+  * `spark.catalog.clearCache()` after every query (by design — 366
   * queries each pinning their own caches would accumulate), which also
   * evicts any cross-query pool, so each consumer re-paid the full build
   * (measured: d07 + p06 each rebuilt the shingle→contamination-pair
   * subtree, 2.8 s + 4.3 s warm at sf0.1). Instead the pool is
-  * MATERIALIZED once to parquet and consumers read that — exactly the
-  * stage-boundary materialization a 100 TB pipeline would use between
-  * assembly and its consumers, and immune to clearCache.
+  * MATERIALIZED once to a per-JVM temp parquet and consumers read that —
+  * exactly the stage-boundary materialization a 100 TB pipeline would
+  * use between assembly and its consumers, and immune to clearCache.
   *
-  * Cross-JVM reuse (r10 verdict item 1): the sf10 scale proof measured
-  * the s10 kNN pool build at 2534.6 s, re-paid by EVERY fresh JVM while
-  * the 8 graph consumers amortize it only within a process. The durable
-  * layer keys the on-disk materialization by
-  * `(code fingerprint, pool key, fixture fingerprint)`:
-  *  - code fingerprint = md5 over the graft classfile BYTES — any
-  *    kernel recompile lands in a fresh namespace, so a stale pool can
-  *    never cross a code change (the failure mode a manual version tag
-  *    invites when someone forgets to bump it);
-  *  - fixture fingerprint = md5 over (relpath, size, mtime) of every
-  *    file under the fixture dir — a rewritten fixture can never serve
-  *    a stale pool, the same property the old per-JVM temp dir gave.
-  * Entries carry the StreamingOps `_pool_format` header contract: a dir
-  * that exists without its header, or with an alien header, is refused
-  * loudly — never silently reinterpreted. Builds land in a tmp dir
-  * (data + header) and commit via one atomic rename, so a crashed build
-  * is invisible, and losing a cross-JVM rename race means adopting the
-  * winner's identical deterministic bytes.
-  *
-  * `-Dgraft.pool.rebuild=1` (set by Verify and Bench) opts a JVM out of
-  * durable REUSE into the round-10 per-JVM-temp behavior: Verify's
-  * two-JVM determinism gate must keep re-deriving pools from scratch
-  * (a cross-JVM flap hidden by a shared artifact is the r52 bug class),
-  * and Bench's floors must keep measuring builds, not cache reads. The
-  * tools that pay the build repeatedly — QTime sf10 sweeps, SweepProbe,
-  * any multi-JVM driver — take the durable path by default.
+  * There is one path: every JVM builds its own pools under a fresh
+  * `graft_pools_*` dir in `java.io.tmpdir`, deleted when the JVM exits.
+  * A durable cross-JVM cache (keyed by classfile md5 and fixture
+  * fingerprint) used to sit beside it; it was removed because every
+  * measured caller — Verify's two-JVM determinism gate, Bench's floors,
+  * each benchmark pass — turned it off to re-derive pools, so it was a
+  * second code path that nothing measured relied on. A fresh dir per
+  * JVM also means a rewritten fixture dir can never serve a stale pool.
   *
   * Hash-safety: only exact-typed columns (strings/longs/exact decimals)
   * may ride through a pool — parquet round-trips them bitwise.
   */
 object SharedPools {
-  private lazy val jvmRoot =
-    java.nio.file.Files.createTempDirectory("graft_pools_").toString
+  private lazy val root: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pools_").toFile
+    // Pool data only lives as long as its JVM. Hadoop's hook manager runs
+    // hooks by descending priority, so this one runs after Spark's own
+    // (SparkContext stop, at FileSystem priority + 30) and no task can
+    // still be writing into the dir while it is deleted.
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => org.apache.commons.io.FileUtils.deleteQuietly(dir),
+      org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 20)
+    dir.toString
+  }
   private val built =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-  /** Builds actually executed by this JVM (spec hook: a durable cache
-    * hit must NOT increment this). */
+  /** Builds actually executed by this JVM (spec hook). */
   private[queries] val buildsRun = new java.util.concurrent.atomic.AtomicLong(0)
-  /** Spec hook: drop one pool's in-memory entries (all sessions/dirs) so
-    * a re-entry exercises the disk path again. */
+  /** Drop one pool's in-memory entries (all sessions/dirs) so the next
+    * entry pays the build again (Bench's `pool:` lines time it). */
   private[graft] def evict(key: String): Unit =
     built.keySet.removeIf(_._3 == key)
 
-  private def md5hex(md: java.security.MessageDigest): String =
-    md.digest().map("%02x".format(_)).mkString.take(16)
-
-  /** md5 over the graft classfile bytes — the durable namespace. Copied
-    * classes dirs (frozen-sweep protocol) hash identically; any
-    * recompile that changes bytes moves to a fresh namespace. */
-  private lazy val codeFingerprint: String = {
-    import scala.jdk.CollectionConverters._
-    val loc = getClass.getProtectionDomain.getCodeSource.getLocation.toURI
-    val root = java.nio.file.Paths.get(loc)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    if (java.nio.file.Files.isDirectory(root)) {
-      val files = java.nio.file.Files.walk(root).iterator().asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p) && p.toString.endsWith(".class"))
-        .toSeq.sortBy(root.relativize(_).toString)
-      files.foreach { p =>
-        md.update(root.relativize(p).toString.getBytes("UTF-8"))
-        md.update(java.nio.file.Files.readAllBytes(p))
-      }
-    } else {
-      // launched from a jar: hash the jar bytes
-      md.update(java.nio.file.Files.readAllBytes(root))
-    }
-    md5hex(md)
-  }
-
-  private val fixtureFps =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** md5 over (relpath, size, mtime) of every file under the fixture
-    * dir: a rewritten fixture changes the key, so staleness is
-    * impossible by construction. Memoized per (dir, JVM) — Verify/Bench
-    * never mutate fixtures mid-run. */
-  private def fixtureFingerprint(d: String): String =
-    fixtureFps.computeIfAbsent(d, { dir =>
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(dir)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val files = java.nio.file.Files.walk(root).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_)).toSeq
-        .sortBy(root.relativize(_).toString)
-      files.foreach { p =>
-        // nanosecond mtime: millisecond precision collided in practice
-        // (two same-size files written within one ms hashed identically)
-        val mt = java.nio.file.Files.getLastModifiedTime(p)
-          .to(java.util.concurrent.TimeUnit.NANOSECONDS)
-        val line = s"${root.relativize(p)}|${java.nio.file.Files.size(p)}|$mt\n"
-        md.update(line.getBytes("UTF-8"))
-      }
-      md5hex(md)
-    })
-
-  private[graft] def rebuildOnly: Boolean =
-    sys.props.get("graft.pool.rebuild").contains("1")
-
-  /** Durable cache root for this code build. Base overridable via
-    * GRAFT_POOL_CACHE (the frozen-sweep protocol points every QTime JVM
-    * at one shared base). Best-effort GC of namespaces older than 48 h —
-    * never the current one, and never young ones a concurrent frozen
-    * sweep may still be reading. */
-  private lazy val durableRoot: String = {
-    val base = sys.env.getOrElse("GRAFT_POOL_CACHE",
-      s"${System.getProperty("java.io.tmpdir")}/graft_pool_cache")
-    val mine = java.nio.file.Paths.get(base, codeFingerprint)
-    java.nio.file.Files.createDirectories(mine)
-    try {
-      val cutoff = System.currentTimeMillis() - 48L * 3600 * 1000
-      Option(new java.io.File(base).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName != codeFingerprint && f.lastModified < cutoff)
-        .foreach { f =>
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(f.toPath).sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
-    } catch { case _: Throwable => () } // GC is best-effort, reuse is not
-    mine.toString
-  }
-
-  private val PoolHeader = "_pool_format"
-
-  /** Spec hook: the durable on-disk location a (dir, key) pool commits
-    * to — lets refusal tests corrupt exactly the right entry. */
-  private[graft] def durablePath(d: String, key: String): java.nio.file.Path =
-    java.nio.file.Paths.get(s"$durableRoot/${key}_${fixtureFingerprint(d)}")
-
-  /** Build `df` at most once per (session, dir, key) in this JVM; reuse
-    * a durable on-disk build from ANY prior JVM of this code build on
-    * this fixture (unless `-Dgraft.pool.rebuild=1`). Every caller gets a
-    * plain parquet scan of the materialized result.
+  /** Build `df` at most once per (session, dir, key): first caller pays
+    * the build + a parquet write; every caller (including the first)
+    * gets a plain parquet scan of the materialized result.
     *
     * The build runs OUTSIDE the map's lock (check-then-putIfAbsent, not
     * computeIfAbsent): pool builds may consume OTHER pools — d08's
     * cluster pool reads the jaccard-pair pool — and a nested
     * computeIfAbsent on one ConcurrentHashMap throws "Recursive
     * update". A racing duplicate build writes the same deterministic
-    * bytes, so losing any race is waste, never wrongness. */
+    * bytes to the same path with mode=overwrite, so losing the
+    * putIfAbsent race is waste, never wrongness. */
   def materialized(s: SparkSession, d: String, key: String)(build: => DataFrame): DataFrame = {
     built.keySet.removeIf(k => k._1.sparkContext.isStopped)
     val mapKey = (s, d, key)
     val existing = built.get(mapKey)
-    if (existing != null) return existing
-    val df =
-      if (rebuildOnly) {
-        // round-10 per-JVM semantics: always pay the build, privately
-        val path = s"$jvmRoot/${key}_${Integer.toHexString(d.hashCode)}"
-        buildsRun.incrementAndGet()
-        build.write.mode("overwrite").parquet(path)
-        s.read.parquet(path)
-      } else {
-        val header = s"pool/$key:${fixtureFingerprint(d)}:$codeFingerprint"
-        val finalDir = java.nio.file.Paths.get(s"$durableRoot/${key}_${fixtureFingerprint(d)}")
-        if (java.nio.file.Files.exists(finalDir)) {
-          val hp = finalDir.resolve(PoolHeader)
-          require(java.nio.file.Files.exists(hp),
-            s"unheadered pool dir at $finalDir: data present but no $PoolHeader header " +
-              s"(expected '$header') — a foreign or torn write cannot prove its provenance; " +
-              "delete the dir to rebuild")
-          val found = java.nio.file.Files.readString(hp).trim
-          require(found == header,
-            s"pool format mismatch at $finalDir: header '$found', this build expects " +
-              s"'$header'; delete the dir to rebuild")
-          s.read.parquet(finalDir.resolve("data").toString)
-        } else {
-          val tmp = java.nio.file.Files.createTempDirectory(
-            java.nio.file.Paths.get(durableRoot), s".build_${key}_")
-          buildsRun.incrementAndGet()
-          build.write.mode("overwrite").parquet(tmp.resolve("data").toString)
-          java.nio.file.Files.writeString(tmp.resolve(PoolHeader), header)
-          try {
-            java.nio.file.Files.move(tmp, finalDir,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            s.read.parquet(finalDir.resolve("data").toString)
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException |
-                 _: java.nio.file.AccessDeniedException |
-                 _: java.nio.file.DirectoryNotEmptyException =>
-              // lost the cross-JVM race: the winner's bytes are
-              // deterministic-identical; keep ours private this JVM
-              s.read.parquet(tmp.resolve("data").toString)
-          }
-        }
-      }
-    val prev = built.putIfAbsent(mapKey, df)
-    if (prev != null) prev else df
+    if (existing != null) existing
+    else {
+      val path = s"$root/${key}_${Integer.toHexString(d.hashCode)}"
+      buildsRun.incrementAndGet()
+      build.write.mode("overwrite").parquet(path)
+      val df = s.read.parquet(path)
+      val prev = built.putIfAbsent(mapKey, df)
+      if (prev != null) prev else df
+    }
   }
 }

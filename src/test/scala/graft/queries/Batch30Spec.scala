@@ -109,24 +109,40 @@ class Batch30Spec extends AnyFunSuite {
   }
 
   test("d32: shingle stats replay; types grow and the pair bound collapses with k") {
-    val texts = graft.Tables.documents(spark, sf).select(col("text"))
-      .collect().map(_.getString(0))
-    val got = run("d32_shingle_sweep").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(got.map(_._1).toSeq == ExtraQueries31.ShingleKs)
+    // Second corpus: every document has fewer than 5 tokens, so k=5 has
+    // no shingle anywhere, yet the oracle's per-k block still emits
+    // (5, 0, NULL, NULL).
+    val short = java.nio.file.Files.createTempDirectory("d32_short_docs").toString
+    val ss = spark
+    import ss.implicits._
+    Seq("a b c d", "a b c", "b c d e", "x y", "solo", "").zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      .write.parquet(s"$short/documents.parquet")
     // the type grain is the 60-bit md5-prefix KEY of the shingle (what
     // both engines shuffle) — the replay hashes the same way, so even a
     // birthday collision would fold identically here and in the engine
     def key60(sh: String): Long = java.lang.Long.parseLong(md5hex(sh).substring(0, 15), 16)
-    got.foreach { case (k, nTypes, nDocSh, bound) =>
-      val perDoc = texts.map(_.split(" ", -1).sliding(k).map(w => key60(w.mkString(" "))).toSet)
-      val counts = perDoc.flatten.groupBy(identity).view.mapValues(_.length.toLong)
-      assert(nTypes == counts.size.toLong, s"k=$k type count diverges")
-      assert(nDocSh == counts.values.sum, s"k=$k doc-shingle mass diverges")
-      assert(bound == counts.values.map(d => d * (d - 1) / 2).sum, s"k=$k pair bound diverges")
+    def optLong(r: org.apache.spark.sql.Row, i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    def replay(dir: String): Seq[(Int, Long, Option[Long], Option[Long])] = {
+      val texts = graft.Tables.documents(spark, dir).select(col("text"))
+        .collect().map(_.getString(0)).toSeq
+      val got = graft.SparkEntry.queries("d32_shingle_sweep")(spark, dir).collect()
+        .map(r => (r.getInt(0), r.getLong(1), optLong(r, 2), optLong(r, 3))).toSeq
+      val want = ExtraQueries31.ShingleKs.map { k =>
+        val counts = texts.flatMap(_.split(" ", -1).sliding(k).filter(_.length == k)
+            .map(w => key60(w.mkString(" "))).toSet)
+          .groupBy(identity).view.mapValues(_.length.toLong).toMap
+        if (counts.isEmpty) (k, 0L, None, None)
+        else (k, counts.size.toLong, Some(counts.values.sum),
+          Some(counts.values.map(d => d * (d - 1) / 2).sum))
+      }
+      assert(got == want, s"d32 diverges from the replay on $dir")
+      got
     }
+    assert(replay(short).last == ((5, 0L, None, None)), "the short corpus must leave k=5 empty")
+    val got = replay(sf)
     assert(got.map(_._2).sliding(2).forall(p => p.head < p.last), "types must grow with k")
-    assert(got.map(_._4).sliding(2).forall(p => p.head > p.last),
+    assert(got.map(_._4.get).sliding(2).forall(p => p.head > p.last),
       "the candidate-pair bound must collapse as k grows")
   }
 

@@ -4,18 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The durable cross-JVM pool layer (r10 verdict item 1): the sf10
-  * proof measured the s10 kNN pool build at 2534.6 s, re-paid by every
-  * fresh JVM. SharedPools now commits builds to a disk cache keyed by
-  * (code fingerprint, pool key, fixture fingerprint) with the
-  * StreamingOps header-refusal contract.
-  *
-  * "Second JVM" here is simulated by erasing the ONLY per-JVM state the
-  * reuse path consults — the in-memory (session, dir, key) map — and
-  * re-entering from a fresh session clone: the code fingerprint and
-  * fixture fingerprint are pure functions of bytes on disk, identical
-  * in any real second JVM of the same build. The cross-PROCESS form is
-  * exercised by the QTime sf10 sweep protocol (BENCH_sf10.json).
+/** SharedPools' one path: each JVM builds its pools once per
+  * (session, dir, key) into its own `graft_pools_*` root, which is
+  * deleted when the JVM exits.
   */
 class SharedPoolsSpec extends AnyFunSuite {
   private lazy val spark = graft.SparkTestSession.spark
@@ -26,121 +17,72 @@ class SharedPoolsSpec extends AnyFunSuite {
     dir.toString
   }
 
-  private def withDurableMode[A](body: => A): A = {
-    val prev = sys.props.get("graft.pool.rebuild")
-    sys.props -= "graft.pool.rebuild"
-    try body finally prev.foreach(v => sys.props("graft.pool.rebuild") = v)
-  }
-
-  test("a cold re-entry reuses the durable build without rebuilding, identical rows") {
-    withDurableMode {
-      val dir = freshFixture("reuse")
-      val before = SharedPools.buildsRun.get()
-      val df1 = SharedPools.materialized(spark, dir, "spec_reuse") {
-        spark.range(200).selectExpr("id", "id * id AS sq")
-      }
-      val rows1 = df1.orderBy("id").collect().map(_.toSeq.toList).toList
-      assert(SharedPools.buildsRun.get() == before + 1, "first touch must pay the build")
-
-      // cold-JVM simulation: drop the per-JVM map entry, re-enter from a
-      // second session with a build closure that would FAIL if evaluated.
-      SharedPools.evict("spec_reuse")
-      val s2 = spark.newSession()
-      val df2 = SharedPools.materialized(s2, dir, "spec_reuse") {
-        fail("durable reuse must not re-run the build"): org.apache.spark.sql.DataFrame
-      }
-      val rows2 = df2.orderBy("id").collect().map(_.toSeq.toList).toList
-      assert(rows1 == rows2, "reused pool must be byte-identical")
-      assert(SharedPools.buildsRun.get() == before + 1, "re-entry must not rebuild")
-    }
-  }
-
-  test("-Dgraft.pool.rebuild=1 opts out of durable reuse (Verify/Bench semantics)") {
+  test("every cold entry pays the build") {
     val dir = freshFixture("rebuild")
-    val prev = sys.props.get("graft.pool.rebuild")
-    sys.props("graft.pool.rebuild") = "1"
-    try {
-      val before = SharedPools.buildsRun.get()
-      SharedPools.materialized(spark, dir, "spec_rb") {
-        spark.range(10).selectExpr("id")
-      }.collect()
-      SharedPools.evict("spec_rb")
-      SharedPools.materialized(spark.newSession(), dir, "spec_rb") {
-        spark.range(10).selectExpr("id")
-      }.collect()
-      assert(SharedPools.buildsRun.get() == before + 2,
-        "rebuild mode must pay the build on every cold entry — bench floors measure builds")
-    } finally {
-      sys.props -= "graft.pool.rebuild"
-      prev.foreach(v => sys.props("graft.pool.rebuild") = v)
-    }
+    val before = SharedPools.buildsRun.get()
+    SharedPools.materialized(spark, dir, "spec_rb") {
+      spark.range(10).selectExpr("id")
+    }.collect()
+    SharedPools.materialized(spark, dir, "spec_rb") {
+      fail("a warm entry must reuse the build"): org.apache.spark.sql.DataFrame
+    }.collect()
+    assert(SharedPools.buildsRun.get() == before + 1)
+    SharedPools.evict("spec_rb")
+    SharedPools.materialized(spark.newSession(), dir, "spec_rb") {
+      spark.range(10).selectExpr("id")
+    }.collect()
+    assert(SharedPools.buildsRun.get() == before + 2,
+      "an evicted entry must pay the build again — bench floors measure builds")
   }
 
   test("distinct fixture dirs never share a durable entry under one key") {
-    withDurableMode {
-      // same file name, same SIZE — only the mtime separates them (the
-      // hardest legitimate case: a regenerated fixture of equal bytes)
-      val dirA = freshFixture("fpX")
-      val dirB = freshFixture("fpX")
-      Files.setLastModifiedTime(Paths.get(dirB, "data.txt"),
-        java.nio.file.attribute.FileTime.fromMillis(
-          Files.getLastModifiedTime(Paths.get(dirA, "data.txt")).toMillis + 1234))
-      val before = SharedPools.buildsRun.get()
-      val a = SharedPools.materialized(spark, dirA, "spec_fp") {
-        spark.range(5).selectExpr("id", "'A' AS tag")
-      }.select("tag").distinct().collect().map(_.getString(0)).toList
-      val b = SharedPools.materialized(spark, dirB, "spec_fp") {
-        spark.range(5).selectExpr("id", "'B' AS tag")
-      }.select("tag").distinct().collect().map(_.getString(0)).toList
-      assert(a == List("A") && b == List("B"))
-      assert(SharedPools.buildsRun.get() == before + 2,
-        "each fixture fingerprint owns its own entry")
-    }
+    val dirA = freshFixture("fpX")
+    val dirB = freshFixture("fpX")
+    val before = SharedPools.buildsRun.get()
+    val a = SharedPools.materialized(spark, dirA, "spec_fp") {
+      spark.range(5).selectExpr("id", "'A' AS tag")
+    }.select("tag").distinct().collect().map(_.getString(0)).toList
+    val b = SharedPools.materialized(spark, dirB, "spec_fp") {
+      spark.range(5).selectExpr("id", "'B' AS tag")
+    }.select("tag").distinct().collect().map(_.getString(0)).toList
+    assert(a == List("A") && b == List("B"))
+    assert(SharedPools.buildsRun.get() == before + 2, "each fixture dir owns its own entry")
   }
 
-  test("an unheadered or alien-header durable dir is refused loudly") {
-    withDurableMode {
-      val dir = freshFixture("refuse")
-      SharedPools.materialized(spark, dir, "spec_refuse") {
-        spark.range(7).selectExpr("id")
-      }.collect()
-      val onDisk = SharedPools.durablePath(dir, "spec_refuse")
-      val header = onDisk.resolve("_pool_format")
-      assert(Files.exists(header), "committed pool must carry its header")
-
-      // no header: a foreign or torn write cannot prove provenance
-      Files.delete(header)
-      SharedPools.evict("spec_refuse")
-      val e1 = intercept[IllegalArgumentException] {
-        SharedPools.materialized(spark.newSession(), dir, "spec_refuse") {
-          fail("refusal must fire before any rebuild"): org.apache.spark.sql.DataFrame
-        }
-      }
-      assert(e1.getMessage.contains("unheadered pool dir"))
-
-      // alien header: an incompatible producer
-      Files.writeString(header, "pool/alien:deadbeef:cafebabe")
-      SharedPools.evict("spec_refuse")
-      val e2 = intercept[IllegalArgumentException] {
-        SharedPools.materialized(spark.newSession(), dir, "spec_refuse") {
-          fail("refusal must fire before any rebuild"): org.apache.spark.sql.DataFrame
-        }
-      }
-      assert(e2.getMessage.contains("pool format mismatch"))
-    }
+  test("a JVM's pool root is deleted when it exits") {
+    // A child JVM on this classpath materializes one pool under its own
+    // java.io.tmpdir and exits normally; afterwards no root may remain.
+    import scala.jdk.CollectionConverters._
+    val tmp = Files.createTempDirectory("pool_root_exit")
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filter(_.startsWith("--add-opens")).toSeq
+    val cmd = Seq(javaBin, "-Xmx512m", s"-Djava.io.tmpdir=$tmp") ++ opens ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.queries.PoolRootChild")
+    try {
+      val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+      val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
+      assert(proc.waitFor() == 0, out.takeRight(20).mkString("\n"))
+      val poolFile = out.collectFirst { case l if l.startsWith("POOL ") => l.stripPrefix("POOL ") }
+      assert(poolFile.exists(_.contains(s"$tmp/graft_pools_")),
+        s"the child must materialize its pool under its own root: ${out.takeRight(20)}")
+      val left = Files.list(tmp).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("graft_pools_")).toList
+      assert(left.isEmpty, s"pool roots left behind: $left")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
   }
 
   test("every PoolWarmup key resolves to a registered SharedPools call site key") {
     // The warm pass is only as honest as its registry: a pool added to a
     // query but not to PoolWarmup silently reverts to first-touch
-    // attribution. Grep the query sources for materialized(...) keys and
+    // attribution. Grep the sources for materialized(...) keys and
     // require the registry to match them exactly.
     import scala.jdk.CollectionConverters._
     val srcRoot = Paths.get("src/main/scala/graft")
     val keyRe = java.util.regex.Pattern.compile(
       """SharedPools\.materialized\([^,]+,[^,]+,\s*"([^"]+)"""")
     val inSource: Set[String] = Files.walk(srcRoot).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && !p.toString.contains("/tools/"))
+      .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         val m = keyRe.matcher(Files.readString(p))
         Iterator.continually(m).takeWhile(_.find()).map(_.group(1)).toList.iterator
@@ -149,5 +91,23 @@ class SharedPoolsSpec extends AnyFunSuite {
     assert(inSource == registered,
       s"PoolWarmup registry out of sync: source has ${inSource -- registered} unregistered, " +
         s"registry has ${registered -- inSource} orphaned")
+  }
+}
+
+/** Child JVM for the pool-root exit test: one small pool, then a normal
+  * exit. Prints one of the pool's files as `POOL <path>`. */
+object PoolRootChild {
+  def main(args: Array[String]): Unit = {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val dir = java.nio.file.Files.createTempDirectory("pool_fx_child").toString
+    val pool = SharedPools.materialized(spark, dir, "spec_exit") {
+      spark.range(3).selectExpr("id")
+    }
+    println(s"POOL ${pool.inputFiles.head}")
+    spark.stop()
   }
 }

@@ -31,6 +31,11 @@ run_verify() { # sfdir outdir  (honors SPARK_GRAFT_ANSI etc. from env)
   if grep '\[verify\]' "$log"; then echo "VERIFY FAILURES in $1"; exit 1; fi
 }
 
+# Every JVM deletes its SharedPools root (graft_pools_*) on exit; the
+# last step below fails the gate if any root this run created is left.
+pool_roots() { find /tmp -maxdepth 1 -name 'graft_pools_*' | sort; }
+pool_roots_before="$(pool_roots)"
+
 echo "== compile"
 sbt -batch compile | tail -1
 
@@ -185,4 +190,7 @@ print(f\"[close] frozen BENCH_QUERIES_r$(printf '%02d' "$GRAFT_ROUND").json: {le
     echo "== snapshotted BENCH_QUERIES_r$(printf '%02d' "$GRAFT_ROUND").json (gate green)"
   fi
 fi
+echo "== leaked pool roots"
+leaked="$(comm -13 <(echo "$pool_roots_before") <(pool_roots))"
+if [ -n "$leaked" ]; then echo "$leaked"; echo "POOL ROOTS LEFT BEHIND"; exit 1; fi
 echo "== ALL GATES GREEN"

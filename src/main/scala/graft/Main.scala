@@ -1,13 +1,19 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.etl.{ConfigLoader, Enrich, Pipeline}
+import graft.etl.{ConfigLoader, Pipeline}
 
 /** CLI entry (SURVEY.md O21; `/root/reference/etl.py:472-518`): run the
   * full pipeline from a JSON/YAML config file.
   *
   *   runMain graft.Main --config fixtures/config.yaml \
   *       [--pages fixtures/pages] [--out /tmp/out]
+  *
+  * Prints `rows=N processed=P bypassed=B`. The counters ride on the
+  * run's one action ([[graft.etl.Pipeline.runObserved]]): the CSV write
+  * with `--out`; without it a `count()`, which is then the only action.
+  * `rows` is `processed + bypassed`, since every row is one or the
+  * other.
   *
   * Fail-fast guards mirror the reference: exit 1 on missing/invalid
   * config or empty extract. `SPARK_GRAFT_CPUS` sets the local core
@@ -48,15 +54,17 @@ object Main {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
-      val (df, obs) = Enrich.withMetrics(
-        Pipeline.run(spark, Pipeline.Config(
+      val out = opts.get("--out")
+      val (df, metrics) = Pipeline.runObserved(spark, Pipeline.Config(
           pagesDir = opts.getOrElse("--pages", "/root/repo/fixtures/pages"),
           essieTerms = cfg.filterAdvanced,
           gate = cfg.gate,
-          outputPath = opts.get("--out"))))
-      val n = df.count()
-      val m = obs.get
-      println(s"rows=$n processed=${m("processed")} bypassed=${m("bypassed")}")
+          outputPath = out))
+      if (out.isEmpty) df.count() // no sink: this is the action the counters ride on
+      val m = metrics.get
+      val (processed, bypassed) = (m("processed").asInstanceOf[Long], m("bypassed").asInstanceOf[Long])
+      val n = processed + bypassed
+      println(s"rows=$n processed=$processed bypassed=$bypassed")
       if (n == 0) sys.exit(1) // etl.py:508-510
     } finally spark.stop()
   }

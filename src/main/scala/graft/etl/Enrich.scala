@@ -39,40 +39,46 @@ object Enrich {
       .map(ks => col(orderKey).isin(ks: _*))
       .getOrElse(lit(true))
     val processed = sliced && inSet
-    flat
-      .withColumn("processed", processed.cast(IntegerType))
-      .withColumn(cfg.aiColumn,
-        when(col("processed") === 1, RuleClassifier.classifyCol(col("criteria")))
-          .otherwise(lit("N/A")))
+    classified(flat.withColumn("processed", processed.cast(IntegerType)), cfg.aiColumn,
+      gate = Some(col("processed") === 1))
       // reference output order: processed first, bypassed after (etl.py:409-414)
       .orderBy(desc("processed"), col(orderKey))
   }
 
   /** Success/bypass counters (SURVEY.md O18; `etl.py:390-421`'s running
     * counts) as observed metrics: zero extra passes — the counts ride on
-    * whatever action consumes the frame. Read them from the returned
-    * Observation after an action. */
+    * the first action that consumes the returned frame. In
+    * [[Pipeline.runObserved]] that action is the CSV write, so
+    * `graft.Main` reads its counters without a recount. Read them from
+    * the returned Observation after that action; both are 0, not null,
+    * on an empty frame. */
   def withMetrics(gated: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
     val obs = org.apache.spark.sql.Observation("ai_metrics")
     val observed = gated.observe(obs,
-      sum(col("processed")).cast(LongType).as("processed"),
-      sum(when(col("processed") === 0, 1L).otherwise(0L)).as("bypassed"))
+      coalesce(sum(col("processed")).cast(LongType), lit(0L)).as("processed"),
+      coalesce(sum(when(col("processed") === 0, 1L).otherwise(0L)), lit(0L)).as("bypassed"))
     (observed, obs)
   }
 
   /** Ungated full-table enrichment — the 100 TB path: two chained
-    * codegen'd projections, no window, no shuffle. The lowered/split
-    * parts are materialized as real columns first so the classifier CASE
+    * codegen'd projections, no window, no shuffle. */
+  def enrichAll(flat: DataFrame, aiColumn: String = "ai_determined_value"): DataFrame =
+    classified(flat, aiColumn, gate = None)
+
+  /** `flat` plus `aiColumn`: the rule classifier where `gate` holds (or
+    * on every row), `'N/A'` elsewhere. The lowered/split parts are
+    * materialized as real columns first so the classifier CASE
     * references attributes, not ~10 copies of the `split_part(lower(…))`
     * subtree (Catalyst keeps multi-use non-cheap aliases un-inlined). */
-  def enrichAll(flat: DataFrame, aiColumn: String = "ai_determined_value"): DataFrame =
+  private def classified(flat: DataFrame, aiColumn: String, gate: Option[Column]): DataFrame = {
+    val label = RuleClassifier.classifyParts(col("_lc"), col("_incl"), col("_excl"))
     flat
       .withColumn("_lc", lower(col("criteria")))
       .withColumn("_incl", split_part(col("_lc"), lit("exclusion criteria"), lit(1)))
       .withColumn("_excl", split_part(col("_lc"), lit("exclusion criteria"), lit(2)))
-      .withColumn(aiColumn,
-        RuleClassifier.classifyParts(col("_lc"), col("_incl"), col("_excl")))
+      .withColumn(aiColumn, gate.fold(label)(when(_, label).otherwise(lit("N/A"))))
       .drop("_lc", "_incl", "_excl")
+  }
 
   /** The remote-classifier operator shape (SURVEY.md O13-O14): the
     * reference calls the LLM once per row, strictly serially, sleeping

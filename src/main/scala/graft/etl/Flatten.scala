@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 /** The reference's core transform: nested study JSON → flat 11-column row
   * with the `'N/A'` sentinel on every missing leaf
@@ -43,4 +44,29 @@ object Flatten {
       na("eligibilityModule.eligibilityCriteria").as("criteria"),
       startYear(sd).as("start_year"))
   }
+}
+
+/** The declared read schema of a study: exactly the leaves [[Flatten]]
+  * and [[Essie]] read (Essie's generic `AREA[<field>]` fallback reads
+  * whatever field a term names and is not covered). Page bodies parsed
+  * against it need no schema-inference pass, and a leaf that no study
+  * in the chain carries reads as null, so Flatten writes the reference's
+  * `'N/A'` (`etl.py`'s `.get(k, 'N/A')`) instead of failing analysis.
+  * A leaf added to Flatten or Essie must be added here too (FlattenSpec
+  * analyzes both readers over an empty frame of this schema). */
+object StudySchema {
+
+  val study: StructType = StructType.fromDDL(
+    """protocolSection STRUCT<
+      |  identificationModule: STRUCT<nctId: STRING, briefTitle: STRING, officialTitle: STRING>,
+      |  statusModule: STRUCT<overallStatus: STRING, startDateStruct: STRUCT<date: STRING>>,
+      |  designModule: STRUCT<studyType: STRING, phases: ARRAY<STRING>>,
+      |  eligibilityModule: STRUCT<sex: STRING, eligibilityCriteria: STRING,
+      |    minimumAge: STRING, maximumAge: STRING>,
+      |  descriptionModule: STRUCT<briefSummary: STRING, detailedDescription: STRING>,
+      |  contactsLocationsModule: STRUCT<locations: ARRAY<STRUCT<country: STRING>>>>""".stripMargin)
+
+  /** A page document (`{"studies": [...], "nextPageToken"?}`); the token
+    * is read on the driver by [[PageFetcher.walk]], not here. */
+  val page: StructType = StructType(Seq(StructField("studies", ArrayType(study))))
 }

@@ -12,11 +12,12 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * 100-page safety cap. The fetch is inherently serial — each request
   * needs the previous page's token — so it stays a driver-side loop
   * here too: [[PageFetcher.walk]], shared with
-  * [[StudiesSource.readPaged]], reads each token with Jackson and runs
-  * no Spark job. Spark parallelism starts once the pages are known.
-  * Beyond the reference, the walk also aborts on a token it has already
-  * followed ([[WalkAbort.Cycle]]) instead of re-reading pages until the
-  * cap.
+  * [[StudiesSource.readPaged]], parses each body once with Jackson for
+  * its token and its study count and runs no Spark job. Spark
+  * parallelism starts when the kept bodies are parsed
+  * ([[StudiesSource.parsePages]]). Beyond the reference, the walk also
+  * aborts on a token it has already followed ([[WalkAbort.Cycle]])
+  * instead of re-reading pages until the cap.
   */
 trait PageFetcher {
 
@@ -91,48 +92,57 @@ object PageFetcher {
   // time — not a per-row hot path.
   private val mapper = new ObjectMapper()
 
-  /** Token parse with failure distinguished from absence: Left = the
-    * body is not JSON at all (protocol failure — e.g. an HTML error page
-    * behind a 200), Right(None) = a well-formed final page, Right(token)
-    * = more pages; a JSON `null` or empty token ends the chain like an
-    * absent one. The distinction matters: a malformed body must abort
-    * the whole extract (partial results are discarded, etl.py:124-127),
-    * not silently terminate the chain with garbage kept. */
-  private[etl] def parseToken(body: String): Either[Unit, Option[String]] =
+  /** What a completed walk kept: one `A` per page in chain order, and
+    * how many elements the pages' `studies` arrays hold in total. */
+  final case class Walked[A](pages: Seq[A], studies: Long)
+
+  /** Token and study-count parse with failure distinguished from
+    * absence: Left = the body is not JSON at all (protocol failure —
+    * e.g. an HTML error page behind a 200), Right((None, n)) = a
+    * well-formed final page, Right((token, n)) = more pages; a JSON
+    * `null` or empty token ends the chain like an absent one. `n` is the
+    * length of the page's `studies` array (0 if it is absent or not an
+    * array). The distinction matters: a malformed body must abort the
+    * whole extract (partial results are discarded, etl.py:124-127), not
+    * silently terminate the chain with garbage kept. */
+  private[etl] def parsePage(body: String): Either[Unit, (Option[String], Int)] =
     try {
       val node = mapper.readTree(body)
       if (node == null || !node.isContainerNode) Left(())
-      else Right(Option(node.get("nextPageToken")).filterNot(_.isNull).map(_.asText())
-        .filter(_.nonEmpty))
+      else Right((
+        Option(node.get("nextPageToken")).filterNot(_.isNull).map(_.asText()).filter(_.nonEmpty),
+        Option(node.get("studies")).filter(_.isArray).fold(0)(_.size)))
     } catch { case _: java.io.IOException => Left(()) }
 
   /** `nextPageToken` of a page body, if present and non-empty. */
   def nextToken(body: String): Option[String] =
-    parseToken(body).toOption.flatten
+    parsePage(body).toOption.flatMap(_._1)
 
   /** The one token walk, shared by [[fetchPages]] and
     * [[StudiesSource.readPaged]]; plain driver code, no Spark job.
     * `fetch(token)` returns what the caller keeps for a page plus its
-    * body, or None on a failed fetch; the body is parsed for the next
-    * token and then dropped. `first` names the first page when it has a
-    * name, so a chain that links back to it is caught as well. The walk
-    * follows tokens until a page has none, stops quietly at `maxPages`,
-    * and aborts on a failed fetch, a malformed body, or a token it has
-    * already followed. */
+    * body, or None on a failed fetch; the body is parsed once, for the
+    * next token and the page's study count. `first` names the first
+    * page when it has a name, so a chain that links back to it is caught
+    * as well. The walk follows tokens until a page has none, stops
+    * quietly at `maxPages`, and aborts on a failed fetch, a malformed
+    * body, or a token it has already followed. */
   private[etl] def walk[A](first: Option[String], maxPages: Int)(
-      fetch: Option[String] => Option[(A, String)]): Either[WalkAbort, Seq[A]] = {
+      fetch: Option[String] => Option[(A, String)]): Either[WalkAbort, Walked[A]] = {
     val kept = scala.collection.mutable.ArrayBuffer.empty[A]
     val seen = scala.collection.mutable.HashSet(first)
+    var studies = 0L
     var token = first
     var more = true
     while (more && kept.size < maxPages) {
       fetch(token) match {
         case None => return Left(WalkAbort.FetchFailed(token))
         case Some((a, body)) =>
-          parseToken(body) match {
+          parsePage(body) match {
             case Left(_) => return Left(WalkAbort.Malformed(token))
-            case Right(next) =>
+            case Right((next, n)) =>
               kept += a
+              studies += n
               more = next.isDefined
               if (more && kept.size < maxPages && !seen.add(next))
                 return Left(WalkAbort.Cycle(next))
@@ -140,24 +150,21 @@ object PageFetcher {
           }
       }
     }
-    Right(kept.toSeq)
+    Right(Walked(kept.toSeq, studies))
   }
 
   /** Walk the token chain through `fetcher`: the page bodies in chain
     * order, or None if the walk aborted (see [[walk]]). */
   def fetchPages(fetcher: PageFetcher, maxPages: Int = 100): Option[Seq[String]] =
-    walk(None, maxPages)(t => fetcher.fetch(t).map(b => (b, b))).toOption
+    walk(None, maxPages)(t => fetcher.fetch(t).map(b => (b, b))).toOption.map(_.pages)
 
-  /** Full extract through the seam: fetch every page on the driver, then
-    * parse + explode distributed (`spark.read.json` over an in-memory
-    * Dataset — one record per page body, so multiline page docs are
-    * fine). None if the walk aborted. For file-backed page sets prefer
-    * [[StudiesSource.readPaged]], which keeps only the page paths on the
-    * driver and scans the page FILES distributed. */
+  /** Full extract through the seam: the walk holds at most `maxPages`
+    * bodies on the driver, then [[StudiesSource.parsePages]] parses and
+    * explodes them distributed — the same extract path as
+    * [[StudiesSource.readPaged]]. The schema is inferred from the
+    * bodies, so an ad-hoc page shape keeps all its fields. None if the
+    * walk aborted. */
   def readFetched(spark: SparkSession, fetcher: PageFetcher,
                   maxPages: Int = 100): Option[DataFrame] =
-    fetchPages(fetcher, maxPages).map { pages =>
-      import spark.implicits._
-      StudiesSource.explodeStudies(spark.read.json(spark.createDataset(pages)))
-    }
+    fetchPages(fetcher, maxPages).map(StudiesSource.parsePages(spark, _, schema = None))
 }

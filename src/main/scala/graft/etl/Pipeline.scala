@@ -1,12 +1,18 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
 /** The reference's full E1 lifecycle (`/root/reference/etl.py:472-518`)
-  * as one composition: paginated extract → flatten → Essie filter
-  * (in-engine analog of the server-side pushdown) → gated enrichment →
+  * as one composition: paginated extract → Essie filter (in-engine
+  * analog of the server-side pushdown) → flatten → gated enrichment →
   * fixed-layout CSV sink. Each stage is the operator documented in its
   * own module; this is the one-call driver program.
+  *
+  * The page walk and the empty-extract guard run on the driver with no
+  * Spark job; the page bodies are parsed against [[StudySchema.page]],
+  * so there is no inference job; the success/bypass counters ride on
+  * the CSV write. With an output path, the write's jobs are the only
+  * jobs the run submits.
   */
 object Pipeline {
 
@@ -18,17 +24,25 @@ object Pipeline {
       gate: Enrich.GateConfig = Enrich.GateConfig(None, None),
       outputPath: Option[String] = None)
 
-  /** Run extract→transform→enrich; write CSV if configured; return the
-    * enriched frame (fail-fast on empty extract like etl.py:493-495). */
-  def run(spark: SparkSession, cfg: Config): DataFrame = {
-    val raw = StudiesSource.readPaged(spark, cfg.pagesDir, cfg.firstPage, cfg.maxPages)
-    require(!raw.isEmpty, "extract produced no studies") // etl.py:493-495
+  /** Run extract→transform→enrich and write CSV if configured. Returns
+    * the enriched frame and its `processed` / `bypassed` counters
+    * ([[Enrich.withMetrics]]), which the frame's first action fulfils:
+    * the CSV write when `outputPath` is set, else the caller's action.
+    * Fails fast with an `IllegalArgumentException` before any Spark job
+    * when the pages hold no studies (etl.py:493-495). */
+  def runObserved(spark: SparkSession, cfg: Config): (DataFrame, Observation) = {
+    val walked = StudiesSource.walkPaged(spark, cfg.pagesDir, cfg.firstPage, cfg.maxPages)
+    if (walked.studies == 0) // etl.py:493-495
+      throw new IllegalArgumentException("extract produced no studies")
+    val raw = StudiesSource.parsePages(spark, walked.pages, Some(StudySchema.page))
     val filtered =
       if (cfg.essieTerms.nonEmpty) raw.filter(Essie.compileAll(cfg.essieTerms)) else raw
-    val flat = Flatten(filtered)
-    val enriched = Enrich.gated(flat, cfg.gate)
+    val (enriched, metrics) = Enrich.withMetrics(Enrich.gated(Flatten(filtered), cfg.gate))
     cfg.outputPath.foreach(p =>
       CsvSink.write(enriched.drop("processed"), p, aiColumn = Some(cfg.gate.aiColumn)))
-    enriched
+    (enriched, metrics)
   }
+
+  /** [[runObserved]] without the counters. */
+  def run(spark: SparkSession, cfg: Config): DataFrame = runObserved(spark, cfg)._1
 }

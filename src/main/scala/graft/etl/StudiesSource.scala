@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** Sources for raw ClinicalTrials.gov-shaped study documents.
   *
@@ -13,11 +14,15 @@ import org.apache.spark.sql.functions._
   * `studies`, follow `nextPageToken` until absent, hard-stop at 100
   * pages. Page fetch is inherently serial (each request needs the
   * previous page's token), so — as in the reference — pagination is a
-  * driver-side loop that costs no Spark job: it reads each page once
-  * and parses only its token. Spark parallelism starts once the page
-  * set is known: all discovered pages are read by a single distributed
-  * `spark.read.json` over the file list (the "page union" of
-  * `etl.py:130-131` becomes one multi-file scan instead of N unions).
+  * driver-side loop that costs no Spark job: [[PageFetcher.walk]] reads
+  * each page once, parses its token and counts its studies, and keeps
+  * the body, so the driver holds at most `maxPages` bodies, the bound
+  * the HTTP path ([[PageFetcher.readFetched]]) has too. Spark
+  * parallelism starts when those bodies are parsed: [[parsePages]], the
+  * one body parse of both paths, turns them into one row per study
+  * (the "page union" of `etl.py:130-131`). There is no file scan, so no
+  * file-listing job; against [[StudySchema.page]] there is no
+  * schema-inference job either.
   *
   * Offline stand-in: a page document is a file and `nextPageToken`
   * holds the *name of the next page file*. The HTTP protocol runs the
@@ -53,7 +58,7 @@ object StudiesSource {
   def explodeStudies(doc: DataFrame): DataFrame = {
     val isStruct = doc.schema.fields.find(_.name == "studies").exists {
       _.dataType match {
-        case org.apache.spark.sql.types.ArrayType(_: org.apache.spark.sql.types.StructType, _) => true
+        case ArrayType(_: StructType, _) => true
         case _ => false
       }
     }
@@ -61,31 +66,51 @@ object StudiesSource {
     else doc.sparkSession.emptyDataFrame
   }
 
+  /** One row per study from page bodies held on the driver, parsed
+    * distributed (`spark.read.json` over an in-memory Dataset: one record
+    * per body, so multiline page docs are fine). With `schema` (a page
+    * schema such as [[StudySchema.page]]) building the frame runs no
+    * Spark job, a leaf no study carries reads as null, and a study whose
+    * field has the wrong JSON type keeps its other fields (Spark's JSON
+    * partial results null only that field). Without it Spark infers the
+    * schema from the bodies, one job, for ad-hoc page shapes. */
+  def parsePages(spark: SparkSession, bodies: Seq[String],
+                 schema: Option[StructType]): DataFrame = {
+    import spark.implicits._
+    val reader = schema.fold(spark.read)(spark.read.schema(_))
+    explodeStudies(reader.json(spark.createDataset(bodies)))
+  }
+
   /** Follow the pagination chain starting at `first`, honoring the
-    * reference's 100-page safety cap (`etl.py:155-158`), then scan all
-    * pages in one distributed read. The walk is [[PageFetcher.walk]]:
-    * each page body is read once through the Hadoop `FileSystem` API
-    * (any scheme `spark.read.json` accepts) and its token parsed on the
-    * driver, so the walk itself submits no Spark job; only the page
-    * paths are kept. A missing page, a page that is not JSON, or a
-    * token naming a page already read aborts the extract with an
-    * `IllegalStateException` that names the page. */
-  def readPaged(spark: SparkSession, dir: String, first: String = "page_1.json",
-                maxPages: Int = 100): DataFrame = {
+    * reference's 100-page safety cap (`etl.py:155-158`), through
+    * [[PageFetcher.walk]]: each page body is read once through the
+    * Hadoop `FileSystem` API (any scheme `spark.read.json` accepts) and
+    * kept, with the chain's study count. No Spark job runs. A missing
+    * page, a page that is not JSON, or a token naming a page already
+    * read aborts the extract with an `IllegalStateException` that names
+    * the page. */
+  def walkPaged(spark: SparkSession, dir: String, first: String = "page_1.json",
+                maxPages: Int = 100): PageFetcher.Walked[String] = {
     val conf = spark.sessionState.newHadoopConf()
-    val files = PageFetcher.walk(Some(first), maxPages) { token =>
+    PageFetcher.walk(Some(first), maxPages) { token =>
       val path = new Path(dir, token.get)
       try {
         val in = path.getFileSystem(conf).open(path)
-        try Some(path.toString -> new String(in.readAllBytes(), StandardCharsets.UTF_8))
+        try { val body = new String(in.readAllBytes(), StandardCharsets.UTF_8); Some(body -> body) }
         finally in.close()
       } catch { case _: FileNotFoundException => None }
     }.fold(a => throw new IllegalStateException(s"paged extract from $dir aborted: ${a.message}"),
       identity)
-    val all = spark.read.option("multiLine", true).json(files: _*)
-    if (all.columns.contains("studies")) explodeStudies(all)
-    else spark.emptyDataFrame
   }
+
+  /** The studies of the page chain at `dir` ([[walkPaged]], then
+    * [[parsePages]]). `schema` defaults to [[StudySchema.page]], what
+    * [[Flatten]] and [[Essie]] read, so the extract runs no Spark job;
+    * pass None to infer the schema of an ad-hoc page shape. */
+  def readPaged(spark: SparkSession, dir: String, first: String = "page_1.json",
+                maxPages: Int = 100,
+                schema: Option[StructType] = Some(StudySchema.page)): DataFrame =
+    parsePages(spark, walkPaged(spark, dir, first, maxPages).pages, schema)
 
   /** Read the single-file studies fixture (`fixtures/studies.json`). */
   def readStudies(spark: SparkSession, path: String): DataFrame =

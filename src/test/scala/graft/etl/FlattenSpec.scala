@@ -42,4 +42,14 @@ class FlattenSpec extends AnyFunSuite {
   test("api field sex is renamed to gender (etl.py:209)") {
     assert(flat("NCT00000001").getAs[String]("gender") == "FEMALE")
   }
+
+  test("the declared read schema holds every leaf Flatten and Essie read") {
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StudySchema.study)
+    Flatten(empty).queryExecution.assertAnalyzed()
+    Seq(Essie.referenceConfigTerms,
+      ConfigLoader.load("fixtures/config.yaml").filterAdvanced).foreach { terms =>
+      empty.filter(Essie.compileAll(terms)).queryExecution.assertAnalyzed()
+    }
+  }
 }

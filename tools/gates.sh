@@ -39,19 +39,25 @@ pool_roots_before="$(pool_roots)"
 echo "== compile"
 sbt -batch compile | tail -1
 
-echo "== ETL smoke (graft.Main: fixture pages -> CSV)"
-# The paper's pipeline end to end. Main refuses a SPARK_GRAFT_CPUS above
-# the core count, and the 16 exported above is for Verify, so Main runs
-# at its default (every core). The counts are the fixtures' own.
+echo "== ETL smoke (graft.Main: fixture pages -> CSV, and without --out)"
+# The paper's pipeline end to end, through both of Main's branches: with
+# --out the counters ride on the CSV write; without it on a count(). Main
+# refuses a SPARK_GRAFT_CPUS above the core count, and the 16 exported
+# above is for Verify, so Main runs at its default (every core). The
+# counts are the fixtures' own.
 etl_out="$(mktemp -d /tmp/gates_etl.XXXXXX)"
-if ! env -u SPARK_GRAFT_CPUS java -Xmx2g -cp "$CP" "${JAVA_FLAGS[@]}" graft.Main \
-    --config fixtures/config.yaml --pages fixtures/pages --out "$etl_out/csv" \
-    >"$etl_out/stdout" 2>"$etl_out/stderr"; then
-  tail -5 "$etl_out/stderr"; echo "ETL SMOKE EXITED NONZERO"; exit 1
-fi
-if ! grep -x 'rows=8 processed=2 bypassed=6' "$etl_out/stdout"; then
-  cat "$etl_out/stdout"; echo "ETL SMOKE: expected rows=8 processed=2 bypassed=6"; exit 1
-fi
+for branch in csv count; do
+  out_args=()
+  [ "$branch" = csv ] && out_args=(--out "$etl_out/csv")
+  if ! env -u SPARK_GRAFT_CPUS java -Xmx2g -cp "$CP" "${JAVA_FLAGS[@]}" graft.Main \
+      --config fixtures/config.yaml --pages fixtures/pages "${out_args[@]}" \
+      >"$etl_out/stdout" 2>"$etl_out/stderr"; then
+    tail -5 "$etl_out/stderr"; echo "ETL SMOKE ($branch) EXITED NONZERO"; exit 1
+  fi
+  if ! grep -x 'rows=8 processed=2 bypassed=6' "$etl_out/stdout"; then
+    cat "$etl_out/stdout"; echo "ETL SMOKE ($branch): expected rows=8 processed=2 bypassed=6"; exit 1
+  fi
+done
 rm -rf "$etl_out"
 
 if [ "${1:-full}" = "close" ]; then

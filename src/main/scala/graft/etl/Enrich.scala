@@ -69,11 +69,14 @@ object Enrich {
     * on every row), `'N/A'` elsewhere. The lowered/split parts are
     * materialized as real columns first so the classifier CASE
     * references attributes, not ~10 copies of the `split_part(lower(…))`
-    * subtree (Catalyst keeps multi-use non-cheap aliases un-inlined). */
+    * subtree (Catalyst keeps multi-use non-cheap aliases un-inlined).
+    * A gated-out row's lowered criteria is null, so it pays no lowering
+    * or splitting. */
   private def classified(flat: DataFrame, aiColumn: String, gate: Option[Column]): DataFrame = {
     val label = RuleClassifier.classifyParts(col("_lc"), col("_incl"), col("_excl"))
+    val lc = lower(col("criteria"))
     flat
-      .withColumn("_lc", lower(col("criteria")))
+      .withColumn("_lc", gate.fold(lc)(when(_, lc)))
       .withColumn("_incl", split_part(col("_lc"), lit("exclusion criteria"), lit(1)))
       .withColumn("_excl", split_part(col("_lc"), lit("exclusion criteria"), lit(2)))
       .withColumn(aiColumn, gate.fold(label)(when(_, label).otherwise(lit("N/A"))))

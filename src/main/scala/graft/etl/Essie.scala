@@ -17,14 +17,18 @@ import org.apache.spark.sql.types.IntegerType
   * reference's server-side pushdown (O3). No custom `Rule` needed.
   *
   * Term grammar covered (everything the reference config uses):
-  *   AREA[Field]VALUE            equality
-  *   AREA[Field]RANGE[a,b]       closed range (dates or unit-bearing ages;
-  *                               MIN/MAX open a side)
-  *   AREA[Field]MISSING          null check
+  *   AREA[StudyType|Sex|Phase|LocationCountry]VALUE   equality
+  *   AREA[StartDate|MinimumAge|MaximumAge]RANGE[a,b]   closed range
+  *                               (dates or unit-bearing ages; MIN/MAX
+  *                               open a side)
+  *   AREA[MinimumAge|MaximumAge]MISSING   null check
   *   SEARCH[Location](AREA[LocationCountry]X)   EXISTS over nested locations
   *   SEARCH[Study]term           full-text containment over study text
   *   (t1 OR t2 OR ...)           disjunction
-  * Top-level terms are AND-folded exactly like `etl.py:99-100`.
+  * Top-level terms are AND-folded exactly like `etl.py:99-100`. Every
+  * area above reads a leaf of the declared read schema ([[StudySchema]]);
+  * [[parse]] refuses any other area rather than guess at it as a
+  * `protocolSection` child.
   */
 object Essie {
 
@@ -44,16 +48,26 @@ object Essie {
   private val SearchLocRe = """SEARCH\[Location\]\((.+)\)""".r
   private val SearchStudyRe = """SEARCH\[Study\](.+)""".r
 
+  /** The areas [[compile]] reads, per term shape. Each maps to a leaf
+    * of [[StudySchema]]; any other area is rejected when parsed. */
+  private val ValueAreas = Seq("StudyType", "Sex", "Phase", "LocationCountry")
+  private val RangeAreas = Seq("StartDate", "MinimumAge", "MaximumAge")
+  private val MissingAreas = Seq("MinimumAge", "MaximumAge")
+
   def parse(s: String): Term = {
     val t = s.trim
+    def area(f: String, known: Seq[String]): String =
+      if (known.contains(f)) f
+      else throw new IllegalArgumentException(
+        s"unsupported Essie term: $t (this form reads AREA[${known.mkString("|")}])")
     if (t.startsWith("(") && t.endsWith(")"))
       Or(splitTopLevelOr(t.substring(1, t.length - 1)).map(parse))
     else t match {
       case SearchLocRe(inner)      => SearchLocation(parse(inner))
       case SearchStudyRe(needle)   => SearchStudy(needle.trim)
-      case AreaRangeRe(f, lo, hi)  => AreaRange(f, lo.trim, hi.trim)
-      case AreaMissingRe(f)        => AreaMissing(f)
-      case AreaRe(f, v)            => Area(f, v.trim)
+      case AreaRangeRe(f, lo, hi)  => AreaRange(area(f, RangeAreas), lo.trim, hi.trim)
+      case AreaMissingRe(f)        => AreaMissing(area(f, MissingAreas))
+      case AreaRe(f, v)            => Area(area(f, ValueAreas), v.trim)
       case other => throw new IllegalArgumentException(s"unparseable Essie term: $other")
     }
   }
@@ -127,7 +141,6 @@ object Essie {
     case Area("Phase", v)     => coalesce(array_contains(phases, v), lit(false))
     case Area("LocationCountry", v) =>
       coalesce(array_contains(transform(locations, l => l.getField("country")), v), lit(false))
-    case Area(f, v) => col(s"protocolSection.$f") === v
 
     case AreaRange("StartDate", lo, hi) => padDate(startDate).between(lo, hi)
     case AreaRange(f @ ("MinimumAge" | "MaximumAge"), lo, hi) =>
@@ -135,14 +148,13 @@ object Essie {
       val loP = boundMonths(lo).map(b => m >= b)
       val hiP = boundMonths(hi).map(b => m <= b)
       (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-    case AreaRange(f, lo, hi) => col(s"protocolSection.$f").between(lo, hi)
 
     case AreaMissing(f @ ("MinimumAge" | "MaximumAge")) => ageCol(f).isNull
-    case AreaMissing(f) => col(s"protocolSection.$f").isNull
 
     case SearchLocation(inner) => compile(inner)
     case SearchStudy(needle)   => fulltext.contains(needle.toLowerCase)
     case Or(ts)                => ts.map(compile).reduce(_ || _)
+    case other => throw new IllegalArgumentException(s"unsupported Essie term: $other")
   }
 
   /** AND-fold of config terms — the reference's joiner (`etl.py:99-100`). */

@@ -47,13 +47,13 @@ object Flatten {
 }
 
 /** The declared read schema of a study: exactly the leaves [[Flatten]]
-  * and [[Essie]] read (Essie's generic `AREA[<field>]` fallback reads
-  * whatever field a term names and is not covered). Page bodies parsed
-  * against it need no schema-inference pass, and a leaf that no study
-  * in the chain carries reads as null, so Flatten writes the reference's
-  * `'N/A'` (`etl.py`'s `.get(k, 'N/A')`) instead of failing analysis.
-  * A leaf added to Flatten or Essie must be added here too (FlattenSpec
-  * analyzes both readers over an empty frame of this schema). */
+  * and [[Essie]] read (Essie refuses an area it has no leaf for). Page
+  * bodies parsed against it need no schema-inference pass, and a leaf
+  * that no study in the chain carries reads as null, so Flatten writes
+  * the reference's `'N/A'` (`etl.py`'s `.get(k, 'N/A')`) instead of
+  * failing analysis. A leaf added to Flatten or Essie must be added here
+  * too (FlattenSpec analyzes both readers over an empty frame of this
+  * schema). */
 object StudySchema {
 
   val study: StructType = StructType.fromDDL(

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** Injectable page-fetch seam for the paginated studies extract.
@@ -14,7 +14,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * here too: [[PageFetcher.walk]], shared with
   * [[StudiesSource.readPaged]], parses each body once with Jackson for
   * its token and its study count and runs no Spark job. Spark
-  * parallelism starts when the kept bodies are parsed
+  * parallelism starts when the page bodies are parsed
   * ([[StudiesSource.parsePages]]). Beyond the reference, the walk also
   * aborts on a token it has already followed ([[WalkAbort.Cycle]])
   * instead of re-reading pages until the cap.
@@ -158,13 +158,14 @@ object PageFetcher {
   def fetchPages(fetcher: PageFetcher, maxPages: Int = 100): Option[Seq[String]] =
     walk(None, maxPages)(t => fetcher.fetch(t).map(b => (b, b))).toOption.map(_.pages)
 
-  /** Full extract through the seam: the walk holds at most `maxPages`
-    * bodies on the driver, then [[StudiesSource.parsePages]] parses and
-    * explodes them distributed — the same extract path as
-    * [[StudiesSource.readPaged]]. The schema is inferred from the
-    * bodies, so an ad-hoc page shape keeps all its fields. None if the
-    * walk aborted. */
+  /** Full extract through the seam: a page cannot be fetched twice, so
+    * the walk keeps at most `maxPages` bodies on the driver, then
+    * [[StudiesSource.parsePages]], the body parse of
+    * [[StudiesSource.readPaged]] too, parses and explodes them
+    * distributed. The schema is inferred from the bodies, so an ad-hoc
+    * page shape keeps all its fields. None if the walk aborted. */
   def readFetched(spark: SparkSession, fetcher: PageFetcher,
                   maxPages: Int = 100): Option[DataFrame] =
-    fetchPages(fetcher, maxPages).map(StudiesSource.parsePages(spark, _, schema = None))
+    fetchPages(fetcher, maxPages).map(b =>
+      StudiesSource.parsePages(spark.createDataset(b)(Encoders.STRING), schema = None))
 }

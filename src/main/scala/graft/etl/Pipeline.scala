@@ -9,10 +9,10 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
   * own module; this is the one-call driver program.
   *
   * The page walk and the empty-extract guard run on the driver with no
-  * Spark job; the page bodies are parsed against [[StudySchema.page]],
-  * so there is no inference job; the success/bypass counters ride on
-  * the CSV write. With an output path, the write's jobs are the only
-  * jobs the run submits.
+  * Spark job; the executors read the page bodies and parse them against
+  * [[StudySchema.page]], so there is no listing or inference job; the
+  * success/bypass counters ride on the CSV write. With an output path,
+  * the write's jobs are the only jobs the run submits.
   */
 object Pipeline {
 
@@ -29,14 +29,16 @@ object Pipeline {
     * ([[Enrich.withMetrics]]), which the frame's first action fulfils:
     * the CSV write when `outputPath` is set, else the caller's action.
     * Fails fast with an `IllegalArgumentException` before any Spark job
-    * when the pages hold no studies (etl.py:493-495). */
+    * when the pages hold no studies (etl.py:493-495), and before any page
+    * is read when an Essie term is one [[Essie.parse]] refuses. */
   def runObserved(spark: SparkSession, cfg: Config): (DataFrame, Observation) = {
+    val filter = Option(cfg.essieTerms).filter(_.nonEmpty).map(Essie.compileAll)
     val walked = StudiesSource.walkPaged(spark, cfg.pagesDir, cfg.firstPage, cfg.maxPages)
     if (walked.studies == 0) // etl.py:493-495
       throw new IllegalArgumentException("extract produced no studies")
-    val raw = StudiesSource.parsePages(spark, walked.pages, Some(StudySchema.page))
-    val filtered =
-      if (cfg.essieTerms.nonEmpty) raw.filter(Essie.compileAll(cfg.essieTerms)) else raw
+    val raw = StudiesSource.parsePages(
+      StudiesSource.pageBodies(spark, walked.pages), Some(StudySchema.page))
+    val filtered = filter.fold(raw)(raw.filter)
     val (enriched, metrics) = Enrich.withMetrics(Enrich.gated(Flatten(filtered), cfg.gate))
     cfg.outputPath.foreach(p =>
       CsvSink.write(enriched.drop("processed"), p, aiColumn = Some(cfg.gate.aiColumn)))

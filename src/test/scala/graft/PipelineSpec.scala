@@ -136,6 +136,16 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("an Essie term the compiler refuses fails the run before any Spark job") {
+    var err: IllegalArgumentException = null
+    val jobs = jobsOf {
+      err = intercept[IllegalArgumentException](Pipeline.run(spark, Pipeline.Config(
+        pagesDir = "fixtures/pages", essieTerms = Seq("AREA[conditionsModule]MISSING"))))
+    }
+    assert(err.getMessage.startsWith("unsupported Essie term: AREA[conditionsModule]MISSING"))
+    assert(jobs.isEmpty, s"${jobs.size} jobs before the refusal")
+  }
+
   test("a study that is an empty object goes on as one all-N/A row") {
     val rows = Pipeline.run(spark, Pipeline.Config(pagesDir = onePage("""{"studies": [{}]}""")))
       .drop("processed").collect()

@@ -62,4 +62,13 @@ class EssieSpec extends AnyFunSuite {
   test("unparseable term throws") {
     intercept[IllegalArgumentException] { Essie.parse("GIBBERISH") }
   }
+
+  test("an area with no leaf in the declared read schema is refused when parsed") {
+    Seq("AREA[conditionsModule]MISSING", "AREA[OverallStatus]RECRUITING",
+      "AREA[StudyType]RANGE[A,B]", "AREA[Sex]MISSING",
+      "(AREA[Sex]ALL OR AREA[conditionsModule]MISSING)").foreach { t =>
+      val e = intercept[IllegalArgumentException](Essie.parse(t))
+      assert(e.getMessage.startsWith("unsupported Essie term: "), t)
+    }
+  }
 }
